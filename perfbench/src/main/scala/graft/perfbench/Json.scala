@@ -1,0 +1,22 @@
+package graft.perfbench
+
+/** Minimal JSON rendering for the run record and the trace file. */
+object Json {
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** A finite double; non-finite values (a failed op's latency) render as null. */
+  def num(d: Double): String = if (d.isNaN || d.isInfinite) "null" else d.toString
+
+  def obj(fields: Seq[(String, String)]): String =
+    fields.map { case (k, v) => s"${str(k)}:$v" }.mkString("{", ",", "}")
+
+  def arr(items: Seq[String]): String = items.mkString("[", ",", "]")
+}
